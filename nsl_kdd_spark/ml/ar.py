@@ -18,12 +18,15 @@ reference's per-column Python dict assembly. Output is a relational
 
 from __future__ import annotations
 
-from collections.abc import Sequence
+import math
+from collections.abc import Mapping, Sequence
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Row
 from pyspark.sql import functions as F
 
 from nsl_kdd_spark.functions.scalar import exact_avg, exact_sum, safe_ratio
+
+SENTINEL = 1000.0   # binary odds when the division is undefined (README.md:1164)
 
 
 def attribute_ratio(
@@ -31,7 +34,7 @@ def attribute_ratio(
     numeric_cols: Sequence[str],
     binary_cols: Sequence[str],
     label_col: str,
-    sentinel: float = 1000.0,
+    sentinel: float = SENTINEL,
     exact_scale: int | None = 2,
 ) -> DataFrame:
     """(feature, ratio) table, one row per scored column.
@@ -78,6 +81,46 @@ def attribute_ratio(
         .select("s.*")
         .orderBy(F.desc("ratio"), "feature")
     )
+
+
+def ratios_from_aggregates(
+    per_class: Sequence[Mapping],
+    global_avg: Mapping[str, float | None],
+    numeric_cols: Sequence[str],
+    binary_cols: Sequence[str],
+) -> list[Row]:
+    """:func:`attribute_ratio`'s (feature, ratio) rows (its
+    ``exact_scale=None`` form), derived on the driver from already
+    collected aggregates: one ``per_class`` row per label value holding
+    ``__avg_<c>`` for each numeric column and ``__sum_<c>`` /
+    ``__cnt_<c>`` for each binary column, plus the global ``avg`` per
+    numeric column.
+
+    Spark's semantics are kept exactly: ``x / 0`` is null, the binary
+    odds fall back to ``SENTINEL`` when null, ``max`` skips nulls and
+    ranks NaN above every number, a null ratio becomes 0.0, and rows
+    are ordered by descending ratio (NaN first), then feature.
+    """
+    def div(a, b):
+        return None if a is None or b is None or b == 0 else a / b
+
+    def spark_max(values):
+        values = [v for v in values if v is not None]
+        nans = [v for v in values if math.isnan(v)]
+        return nans[0] if nans else max(values, default=None)
+
+    ratios = {}
+    for c in numeric_cols:
+        ratios[c] = spark_max(div(r[f"__avg_{c}"], global_avg[c]) for r in per_class)
+    for c in binary_cols:
+        odds = []
+        for r in per_class:
+            s = r[f"__sum_{c}"]
+            odds.append(div(s, None if s is None else r[f"__cnt_{c}"] - s))
+        ratios[c] = spark_max(SENTINEL if o is None else o for o in odds)
+    rows = [Row(feature=c, ratio=0.0 if r is None else float(r)) for c, r in ratios.items()]
+    return sorted(rows, key=lambda r: (0, 0.0, r.feature) if math.isnan(r.ratio)
+                  else (1, -r.ratio, r.feature))
 
 
 def select_features(ar_rows: list, min_ar: float) -> list[str]:

@@ -26,7 +26,7 @@ from dataclasses import dataclass, field
 
 from pyspark.ml import Pipeline, PipelineModel
 from pyspark.ml.clustering import GaussianMixture, KMeans
-from pyspark.ml.feature import StringIndexer
+from pyspark.ml.feature import StringIndexerModel
 from pyspark.ml.functions import vector_to_array
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -75,6 +75,8 @@ class ClusterSplit:
 
     mapping: dict[int, float] = field(default_factory=dict)   # cluster -> prob
     modeled: list[int] = field(default_factory=list)          # clusters to train
+    # cluster -> {label: rows}, non-null labels only
+    label_counts: dict[int, dict[str, int]] = field(default_factory=dict)
 
 
 def split_clusters(
@@ -89,24 +91,27 @@ def split_clusters(
     - > ``min_rows`` rows AND both classes present -> train a model;
     - pure cluster -> map to its class (1.0 attack / 0.0 normal);
     - <= ``min_rows`` rows -> outlier rule: hard 1.0 (attack).
+
+    The aggregate counts rows per (cluster, label), so the split also
+    carries each cluster's label counts, from which
+    :func:`train_cluster_models` builds its label indexers without a
+    Spark job. Rows with a null label count toward neither class.
     """
-    counts = (
-        df.groupBy(cluster_col)
-        .agg(
-            F.count(F.when(F.col(label_col) == attack_value, 1)).alias("attack"),
-            F.count(F.when(F.col(label_col) != attack_value, 1)).alias("normal"),
-        )
-        .collect()
-    )
+    counts = df.groupBy(cluster_col, label_col).agg(F.count(F.lit(1)).alias("n")).collect()
     out = ClusterSplit()
     for row in counts:
-        k, atk, nrm = row[cluster_col], row["attack"], row["normal"]
+        if row[label_col] is not None:
+            per_label = out.label_counts.setdefault(int(row[cluster_col]), {})
+            per_label[row[label_col]] = row["n"]
+    for k, per_label in out.label_counts.items():
+        atk = per_label.get(attack_value, 0)
+        nrm = sum(per_label.values()) - atk
         if atk + nrm > min_rows and atk > 0 and nrm > 0:
-            out.modeled.append(int(k))
+            out.modeled.append(k)
         elif atk + nrm <= min_rows:
-            out.mapping[int(k)] = 1.0          # tiny cluster = outlier = attack
+            out.mapping[k] = 1.0          # tiny cluster = outlier = attack
         else:
-            out.mapping[int(k)] = 1.0 if atk > 0 else 0.0
+            out.mapping[k] = 1.0 if atk > 0 else 0.0
     out.modeled.sort()
     return out
 
@@ -119,12 +124,20 @@ def _attack_slot(pipeline_model: PipelineModel) -> int:
     return 0 if indexer.labels[0] == "attack" else 1
 
 
-def make_cluster_pipeline(classifier, label_col: str = "labels2") -> Pipeline:
-    """[StringIndexer, classifier] — per-cluster indexer so indices
+def make_cluster_pipeline(
+    classifier, label_counts: dict[str, int], label_col: str = "labels2"
+) -> Pipeline:
+    """[StringIndexerModel, classifier] — per-cluster indexer so indices
     reflect the cluster's own majority (the reference trains
     Pipeline[StringIndexer, slicer, RF] per cluster; the slicer is
-    applied up front in this engine)."""
-    indexer = StringIndexer(inputCol=label_col, outputCol="label", handleInvalid="skip")
+    applied up front in this engine). The indexer is built from the
+    cluster's label counts in StringIndexer's frequencyDesc order
+    (count descending, ties alphabetical), so fitting it needs no
+    Spark job."""
+    labels = sorted(label_counts, key=lambda v: (-label_counts[v], v))
+    indexer = StringIndexerModel.from_labels(
+        labels, inputCol=label_col, outputCol="label", handleInvalid="skip"
+    )
     return Pipeline(stages=[indexer, classifier])
 
 
@@ -143,7 +156,8 @@ def train_cluster_models(
     distributed either way."""
     def fit(k: int) -> tuple[int, PipelineModel]:
         sub = df.filter(F.col(cluster_col) == k)
-        return k, make_cluster_pipeline(make_classifier(), label_col).fit(sub)
+        pipeline = make_cluster_pipeline(make_classifier(), split.label_counts[k], label_col)
+        return k, pipeline.fit(sub)
 
     if parallel and len(split.modeled) > 1:
         with ThreadPoolExecutor(max_workers=min(8, len(split.modeled))) as ex:

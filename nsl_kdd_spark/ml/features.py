@@ -12,10 +12,11 @@ from collections.abc import Sequence
 from dataclasses import dataclass
 
 from pyspark.ml.feature import PCA, VectorAssembler, VectorIndexer, VectorSlicer
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Row
 from pyspark.sql import functions as F
 
 from nsl_kdd_spark.functions.scalar import exact_avg, exact_stddev, zscore
+from nsl_kdd_spark.ml.ar import ratios_from_aggregates
 from nsl_kdd_spark.operators.relational import one_hot
 
 
@@ -28,11 +29,14 @@ class StandardizerModel:
     means: dict[str, float]
     stddevs: dict[str, float]
 
-    def transform(self, df: DataFrame, columns: Sequence[str] | None = None) -> DataFrame:
+    def columns(self, columns: Sequence[str] | None = None) -> dict[str, Column]:
+        """The z-score expression per column, for callers that fold it
+        into a wider projection."""
         cols = list(columns) if columns is not None else list(self.means)
-        return df.withColumns({
-            c: zscore(c, F.lit(self.means[c]), F.lit(self.stddevs[c])) for c in cols
-        })
+        return {c: zscore(c, F.lit(self.means[c]), F.lit(self.stddevs[c])) for c in cols}
+
+    def transform(self, df: DataFrame, columns: Sequence[str] | None = None) -> DataFrame:
+        return df.withColumns(self.columns(columns))
 
 
 def fit_standardizer(
@@ -61,6 +65,65 @@ def fit_categories(df: DataFrame, column: str) -> list[str]:
     its §7.4 fidelity quirk); fit on train and reuse for test unless
     reproducing the reference exactly."""
     return sorted(r[0] for r in df.select(column).distinct().collect() if r[0] is not None)
+
+
+@dataclass(frozen=True)
+class FeatureStats:
+    """Every train-side statistic the NSL feature fit needs, from
+    :func:`fit_feature_stats`."""
+
+    ratios: list[Row]                  # attribute_ratio's (feature, ratio) rows, in its order
+    means: dict[str, float | None]     # per numeric column
+    stddevs: dict[str, float | None]   # per numeric column, sample stddev
+    categories: dict[str, list[str]]   # per nominal column, sorted, nulls dropped
+
+    def standardizer(self, columns: Sequence[str]) -> StandardizerModel:
+        return StandardizerModel(
+            means={c: float(self.means[c]) for c in columns},
+            stddevs={c: float(self.stddevs[c]) for c in columns},
+        )
+
+
+def fit_feature_stats(
+    df: DataFrame,
+    numeric_cols: Sequence[str],
+    binary_cols: Sequence[str],
+    nominal_cols: Sequence[str],
+    label_col: str,
+) -> FeatureStats:
+    """Attribute ratios, z-score parameters and one-hot vocabularies in
+    two aggregate passes, where the standalone operators take one pass
+    each (two for :func:`attribute_ratio`, one per column for
+    :func:`fit_categories`):
+
+    - one global ``agg``: ``avg`` and ``stddev`` per numeric column,
+      ``collect_set`` per nominal column;
+    - one ``groupBy(label_col)``: per-class ``avg`` per numeric column,
+      ``sum`` and ``count`` per binary column.
+
+    The ratios are then derived on the driver from the few result rows
+    (:func:`ratios_from_aggregates`). Results equal
+    ``attribute_ratio(..., exact_scale=None)``,
+    ``fit_standardizer(..., exact_scale=None)`` and
+    :func:`fit_categories` exactly. Cache ``df`` first: it is read
+    twice."""
+    glob = df.agg(
+        *[F.avg(c).alias(f"__m_{c}") for c in numeric_cols],
+        *[F.stddev(c).alias(f"__s_{c}") for c in numeric_cols],
+        *[F.collect_set(c).alias(f"__v_{c}") for c in nominal_cols],
+    ).first()
+    per_class = df.groupBy(label_col).agg(
+        *[F.avg(c).alias(f"__avg_{c}") for c in numeric_cols],
+        *[agg for c in binary_cols
+          for agg in (F.sum(c).alias(f"__sum_{c}"), F.count(c).alias(f"__cnt_{c}"))],
+    ).collect()
+    means = {c: glob[f"__m_{c}"] for c in numeric_cols}
+    return FeatureStats(
+        ratios=ratios_from_aggregates(per_class, means, numeric_cols, binary_cols),
+        means=means,
+        stddevs={c: glob[f"__s_{c}"] for c in numeric_cols},
+        categories={c: sorted(glob[f"__v_{c}"]) for c in nominal_cols},
+    )
 
 
 def one_hot_encode(

@@ -86,6 +86,11 @@ def connected_components(
     # second exchange, and every iteration's neighbor_min join reads
     # the persisted b-partitioning instead of re-shuffling the full
     # edge table — one edge shuffle total instead of one per round.
+    # Trade-off: the repartition moves the doubled edge table BEFORE it
+    # is deduplicated (distinct() ran a map-side partial aggregate ahead
+    # of its exchange), so on multigraph inputs with many duplicate or
+    # parallel edges this single exchange can ship more bytes than the
+    # old first one did.
     und = (
         edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
         .unionByName(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))

@@ -34,7 +34,17 @@ def observe_quality(
     after the next action on ``df``, ``observation.get`` holds
     ``n_rows``, ``null_<col>`` per requested column, and
     ``bad_<name>`` per violation predicate (count of rows where the
-    predicate is TRUE)."""
+    predicate is TRUE).
+
+    Caveat: registering a pyspark ``Observation`` initializes the
+    session's lazy ObservationManager, which is not java-serializable.
+    Any later task closure that captures the SparkSession (for example
+    an ML model whose training summary holds the session) then fails
+    with Task-not-serializable for the rest of the session; the
+    catalog's ``q39_rf_classifier`` crashed whenever an observe query
+    had run earlier in the same session. Call this in a session that
+    fits no ML models afterwards, or count with a scan of the
+    materialized table instead (as ``operators.graph`` does)."""
     obs = Observation(name)
     metrics = [F.count(F.lit(1)).alias("n_rows")]
     for c in null_cols:

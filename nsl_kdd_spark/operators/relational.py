@@ -44,14 +44,17 @@ def fill_nulls(df: DataFrame, value: object, subset: Sequence[str] | None = None
 def drop_constant_columns(df: DataFrame, candidates: Sequence[str]) -> DataFrame:
     """Data-driven degenerate-column elimination (the reference drops
     ``num_outbound_cmds`` after a crosstab shows one distinct value,
-    README.md:977-995). One pass of ``approx_count_distinct`` over all
-    candidates — O(1) jobs, not one job per column."""
+    README.md:977-995). One aggregate pass over all candidates — O(1)
+    jobs, not one job per column. A column is constant when
+    ``min == max`` or ``min`` is null (all null). The test is exact and
+    runs in Spark, so NaN = NaN holds as in Spark SQL: an all-NaN
+    column is constant, NaN next to one number is not."""
     if not candidates:
         return df
-    counts = df.agg(
-        *[F.approx_count_distinct(c).alias(c) for c in candidates]
+    flags = df.agg(
+        *[((F.min(c) == F.max(c)) | F.min(c).isNull()).alias(c) for c in candidates]
     ).first()
-    constant = [c for c in candidates if counts[c] <= 1]
+    constant = [c for c in candidates if flags[c]]
     return df.drop(*constant) if constant else df
 
 
@@ -71,6 +74,23 @@ def with_deterministic_id(
     return df.withColumn(id_col, F.monotonically_increasing_id())
 
 
+def one_hot_columns(
+    column: str, categories: Sequence[str], prefix: str | None = None
+) -> list[Column]:
+    """The ``when(col == cat, 1.0)`` indicator columns of :func:`one_hot`,
+    named ``<prefix>_<cat>``, for callers that fold them into a wider
+    projection."""
+    pref = prefix if prefix is not None else column
+    # shared operands, and the category passed as a plain value (the JVM
+    # makes the same literal): each Column call is a round trip to the
+    # JVM, which dominates building wide vocabularies
+    col, one, zero = F.col(column), F.lit(1.0), F.lit(0.0)
+    return [
+        F.when(col == cat, one).otherwise(zero).alias(f"{pref}_{cat}")
+        for cat in categories
+    ]
+
+
 def one_hot(
     df: DataFrame,
     column: str,
@@ -84,12 +104,7 @@ def one_hot(
     no Python worker. Category provenance is the caller's decision (the
     reference's per-dataset vocabularies are its §7.4 fidelity quirk);
     pass train-side categories for sane train/test alignment."""
-    pref = prefix if prefix is not None else column
-    cols = [
-        F.when(F.col(column) == F.lit(cat), F.lit(1.0)).otherwise(F.lit(0.0)).alias(f"{pref}_{cat}")
-        for cat in categories
-    ]
-    out = df.select("*", *cols)
+    out = df.select("*", *one_hot_columns(column, categories, prefix))
     return out.drop(column) if drop_input else out
 
 

@@ -8,6 +8,20 @@ library API instead of 168 cells. Every stage is the Spark-first
 rebuild of the cited reference cell (no Python row UDFs, exact
 aggregation where determinism matters, broadcast-map label lookups).
 
+The fit shared by every entry point makes few passes over the data:
+
+- one CSV read per file: ``prepare`` caches the loaded, repaired,
+  labelled and id'd table before anything scans it;
+- one constant-column pass over the cached train table;
+- two statistics passes (``fit_feature_stats``): a global aggregate for
+  the z-score parameters, global means and one-hot vocabularies, and a
+  per-class aggregate from which the attribute ratios are derived on
+  the driver;
+- one projection, built once, applies one-hot and z-score to train and
+  test;
+- the models read narrow cached vector tables (``id``, ``labels2``,
+  ``labels5``, ``raw_features``), not the wide prepared table.
+
 Model sizes default to the reference's (RF 500x20) but every entry
 point takes overrides so tests run in seconds.
 """
@@ -19,7 +33,11 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from nsl_kdd_spark.ml.ar import attribute_ratio, select_features
+# attribute_ratio, fit_categories and fit_standardizer are not called by
+# the fit (fit_feature_stats computes the same statistics in two
+# passes); they stay importable from here with the rest of the
+# pipeline's operators
+from nsl_kdd_spark.ml.ar import attribute_ratio, select_features  # noqa: F401
 from nsl_kdd_spark.ml.classify import attack_probability, make_rf, train_binary_classifier
 from nsl_kdd_spark.ml.cluster import (
     DEFAULT_SEED,
@@ -28,21 +46,25 @@ from nsl_kdd_spark.ml.cluster import (
     split_clusters,
     train_cluster_models,
 )
-from nsl_kdd_spark.ml.features import (
+from nsl_kdd_spark.ml.features import (  # noqa: F401
     assemble,
     fit_categories,
+    fit_feature_stats,
     fit_standardizer,
-    one_hot_encode,
 )
 from nsl_kdd_spark.ml.labels import with_labels
 from nsl_kdd_spark.ml.metrics import binary_metrics
 from nsl_kdd_spark.operators.relational import (
     drop_constant_columns,
+    one_hot_columns,
     replace_values,
     with_deterministic_id,
 )
 from nsl_kdd_spark.schema import attack_mapping, nsl_kdd_roles
 from nsl_kdd_spark.sources.csv import load_nsl_kdd
+
+# what the models and scoring read of a feature table
+VECTOR_COLS = ("id", "labels2", "labels5", "raw_features")
 
 
 @dataclass
@@ -72,23 +94,22 @@ def prepare(spark: SparkSession, train_path: str, test_path: str) -> NslPrepared
     labels2 regex + labels5 taxonomy map (strict=False for test files
     with unseen attack names — the reference instead extends its dict;
     unseen -> null -> filterable). id: deterministic row_number.
+
+    Each file is read once: the table is cached before the
+    constant-column pass scans it, and that pass fills the train cache.
     """
     roles = nsl_kdd_roles()
     mapping = attack_mapping()
 
-    def _prep(df: DataFrame) -> DataFrame:
-        df = replace_values(df, "su_attempted", {2.0: 0.0})
+    def _prep(path: str) -> DataFrame:
+        df = replace_values(load_nsl_kdd(spark, path), "su_attempted", {2.0: 0.0})
         df = with_labels(df, "labels", mapping, strict=False)
-        return df
+        # ids assigned once on the cached table (SURVEY §4.3: never let
+        # monotonically_increasing_id recompute over uncached lineage)
+        return with_deterministic_id(df, "id").cache()
 
-    train = _prep(load_nsl_kdd(spark, train_path))
-    test = _prep(load_nsl_kdd(spark, test_path))
-    train = drop_constant_columns(train, list(roles.numeric))
-    test = test.select(*train.columns)
-    # ids assigned once on the cached table (SURVEY §4.3: never let
-    # monotonically_increasing_id recompute over uncached lineage)
-    train = with_deterministic_id(train, "id").cache()
-    test = with_deterministic_id(test, "id").cache()
+    train = drop_constant_columns(_prep(train_path), list(roles.numeric))
+    test = _prep(test_path).select(*train.columns)
     return NslPrepared(train=train, test=test)
 
 
@@ -96,28 +117,34 @@ def build_features(
     prepared: NslPrepared, cfg: NslConfig
 ) -> tuple[DataFrame, DataFrame, list[str]]:
     """AR selection + OHE (train vocabularies) + z-score
-    standardization (train stats), applied to train and test."""
+    standardization (train stats), applied to train and test.
+
+    All statistics come from two aggregate passes over the cached train
+    table (``fit_feature_stats``). The one-hot and z-score columns are
+    built once and applied with one ``select`` to both tables: z-scored
+    numeric columns stay in place, one-hot columns follow the input
+    columns."""
     roles = nsl_kdd_roles()
-    numeric = [c for c in roles.numeric if c in prepared.train.columns]
-    binary = [c for c in roles.binary if c in prepared.train.columns]
+    columns = prepared.train.columns
+    numeric = [c for c in roles.numeric if c in columns]
+    binary = [c for c in roles.binary if c in columns]
 
-    ar_rows = attribute_ratio(
-        prepared.train, numeric_cols=numeric, binary_cols=binary,
-        label_col="labels5", exact_scale=None,
-    ).collect()
-    keep_numeric = [c for c in select_features(ar_rows, cfg.min_ar_numeric) if c in numeric]
-    keep_binary = [c for c in select_features(ar_rows, cfg.min_ar_binary) if c in binary]
+    stats = fit_feature_stats(prepared.train, numeric, binary, roles.nominal, "labels5")
+    keep_numeric = [c for c in select_features(stats.ratios, cfg.min_ar_numeric) if c in numeric]
+    keep_binary = [c for c in select_features(stats.ratios, cfg.min_ar_binary) if c in binary]
 
-    cats = {c: fit_categories(prepared.train, c) for c in roles.nominal}
-    scaler = fit_standardizer(prepared.train, keep_numeric, exact_scale=None)
+    zscores = stats.standardizer(keep_numeric).columns()
+    ohe = [col for c in roles.nominal for col in one_hot_columns(c, stats.categories[c])]
+    projection = [zscores[c].alias(c) if c in zscores else F.col(c) for c in columns] + ohe
 
-    def _feats(df: DataFrame) -> DataFrame:
-        df = one_hot_encode(df, roles.nominal, cats, drop_input=False)
-        return scaler.transform(df, keep_numeric)
-
-    ohe_cols = [f"{c}_{v}" for c in roles.nominal for v in cats[c]]
+    ohe_cols = [f"{c}_{v}" for c in roles.nominal for v in stats.categories[c]]
     feature_cols = keep_numeric + keep_binary + ohe_cols
-    return _feats(prepared.train), _feats(prepared.test), feature_cols
+    return prepared.train.select(*projection), prepared.test.select(*projection), feature_cols
+
+
+def _vectors(df: DataFrame, feature_cols: list[str]) -> DataFrame:
+    """Assembled ``raw_features`` with only the columns downstream reads."""
+    return assemble(df, feature_cols, index_binary=False).select(*VECTOR_COLS)
 
 
 def kmeans_rf(
@@ -133,8 +160,8 @@ def kmeans_rf(
     prepared = prepare(spark, train_path, test_path)
     train_f, test_f, feature_cols = build_features(prepared, cfg)
 
-    train_v = assemble(train_f, feature_cols, index_binary=False)
-    test_v = assemble(test_f, feature_cols, index_binary=False)
+    train_v = _vectors(train_f, feature_cols).cache()
+    test_v = _vectors(test_f, feature_cols)
 
     model, train_c = kmeans_assign(
         train_v, "raw_features", k=cfg.kmeans_k, seed=cfg.seed
@@ -178,8 +205,8 @@ def category_rf(
 
     cats = (category,) if category != "R2L_U2R" else ("R2L", "U2R")
     sub = train_f.filter(F.col("labels5").isin("normal", *cats))
-    train_v = assemble(sub, feature_cols, index_binary=False)
-    test_v = assemble(test_f, feature_cols, index_binary=False)
+    train_v = _vectors(sub, feature_cols).cache()
+    test_v = _vectors(test_f, feature_cols)
 
     model = train_binary_classifier(
         train_v,
@@ -221,8 +248,8 @@ def gaussian_rf(
     prepared = prepare(spark, train_path, test_path)
     train_f, test_f, feature_cols = build_features(prepared, cfg)
 
-    train_v = assemble(train_f, feature_cols, index_binary=False)
-    test_v = assemble(test_f, feature_cols, index_binary=False)
+    train_v = _vectors(train_f, feature_cols).cache()
+    test_v = _vectors(test_f, feature_cols)
 
     pca_model, train_p = pca_project(train_v, k=2, input_col="raw_features")
     test_p = pca_model.transform(test_v)
@@ -301,10 +328,12 @@ def nsl_ensemble(
     prepared = prepare(spark, train_path, test_path)
     train_f, test_f, feature_cols = build_features(prepared, cfg)
     full_v = assemble(train_f, feature_cols, index_binary=False).cache()
-    test_v = assemble(test_f, feature_cols, index_binary=False).cache()
+    test_v = _vectors(test_f, feature_cols).cache()
+    # randomSplit sorts each partition by every orderable column, so the
+    # split must see the full table; narrow only its halves
     fit_v, cv_v = full_v.randomSplit([0.8, 0.2], seed=cfg.seed)
-    fit_v = fit_v.cache()
-    cv_v = cv_v.cache()
+    fit_v = fit_v.select(*VECTOR_COLS).cache()
+    cv_v = cv_v.select(*VECTOR_COLS).cache()
 
     rf = lambda: make_rf(  # noqa: E731
         num_trees=cfg.rf_trees, max_depth=cfg.rf_depth, seed=cfg.seed,

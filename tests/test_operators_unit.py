@@ -58,6 +58,17 @@ def test_drop_constant_columns(spark):
     assert out.columns == ["a"]
 
 
+def test_drop_constant_columns_nulls_and_nan(spark):
+    nan = float("nan")
+    df = spark.createDataFrame(
+        [(None, 5.0, nan, nan, 1.0), (None, None, nan, 1.0, 2.0), (None, 5.0, nan, nan, 1.0)],
+        "all_null double, one_and_null double, all_nan double, nan_and_one double, two double",
+    )
+    out = relational.drop_constant_columns(df, df.columns)
+    # all null, one value plus nulls and all NaN (NaN = NaN in Spark) are
+    # constant; NaN next to a number and two numbers are not
+    assert out.columns == ["nan_and_one", "two"]
+
 def test_deterministic_id_row_number(spark):
     df = spark.createDataFrame([("c",), ("a",), ("b",)], "k string")
     out = relational.with_deterministic_id(df, "id", order_by=["k"])

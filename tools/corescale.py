@@ -144,6 +144,11 @@ def main() -> None:
                 [sys.executable, os.path.abspath(__file__), "--run", str(c)],
                 capture_output=True, text=True, cwd=REPO,
             )
+            if proc.returncode != 0:
+                raise RuntimeError(
+                    f"round {r}, {c} cores: child exited with {proc.returncode}; "
+                    f"completed rounds: {json.dumps(raw)}\n{proc.stderr}"
+                )
             line = proc.stdout.strip().splitlines()[-1]
             raw.append({"round": r, "cores": c, **json.loads(line)})
 
